@@ -13,9 +13,6 @@ from dataclasses import dataclass, field
 CORES = min(4, len(os.sched_getaffinity(0)))
 #: fixed driver heap (-Xms = -Xmx), sized to fit a 15 GB host
 HEAP = "4g"
-#: measured full-table scans per run; the verification's full read
-#: before them is the unmeasured one
-SCANS = 3
 
 
 def start_spark(work: str, traced: bool):
@@ -52,7 +49,6 @@ class Outcome:
     lake_bytes: int = 0
     live_rows: int = 0
     attempted: int = 0
-    failed: int = 0
     problems: list[str] = field(default_factory=list)
     layers: dict[str, float] = field(default_factory=dict)
 
@@ -71,13 +67,11 @@ class Outcome:
 
 
 class Context:
-    def __init__(self, spark, work: str, seed: int, seconds: float, tracer,
-                 start: float):
+    def __init__(self, spark, work: str, seed: int, tracer, start: float):
         self.spark = spark
         self.start = start
         self.work = work
         self.seed = seed
-        self.seconds = seconds
         self.tracer = tracer
         self.setup_end: float | None = None
 
@@ -92,13 +86,15 @@ class Context:
         print(f"[{time.perf_counter() - self.start:7.2f} s] {what}",
               file=sys.stderr)
 
-    def scan(self, tables, out: Outcome, n: int = SCANS) -> None:
+    def scan(self, tables, out: Outcome, n: int) -> None:
         """``n`` measured full reads of ``tables``, from building the read
-        plan to the last row materialised in the no-op sink."""
+        plan to the last row materialised in the no-op sink. The
+        verification's full read before them is the unmeasured one."""
         for _ in range(n):
             t = time.perf_counter()
-            read_all(tables).write.format("noop").mode("overwrite").save()
-            out.scan_walls.append(time.perf_counter() - t)
+            df = read_all(tables)
+            plan_s = time.perf_counter() - t
+            out.scan_walls.append(plan_s + timed_noop(df))
             out.attempted += 1
 
     def begin(self) -> None:

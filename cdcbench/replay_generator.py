@@ -4,15 +4,14 @@ An initial snapshot of a landed ``source_code_repos`` table
 (``CdcEngine.run``, ``snapshot_mode="initial"``), then replay from the
 engine's built-in closed-form generator, which is seekable, so ``auto``
 resolves to ``refetch``. 32 buckets, merge-on-read, and the measured
-window is a whole number of compaction cycles: every bucket takes one
-delta per batch and is compacted every ``DELTAS`` batches.
+window is one compaction cycle: every bucket takes one delta per batch
+and is compacted every ``DELTAS`` batches.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -30,6 +29,8 @@ BUCKETS = 32
 #: replay), half on keys the generator never touches
 SNAP_ROWS = 40_000
 SNAP_LO = N_KEYS - SNAP_ROWS // 2
+#: measured scans per run (about 0.6 s each), so their median is steady
+SCANS = 5
 ROW_FIELDS = [("commit", "string"), ("lang", "string"),
               ("content_sha", "string")]
 
@@ -78,11 +79,8 @@ def run(ctx: Context) -> Outcome:
                          config=_config(ctx.seed))
     ctx.begin()
     eng.run(CYCLE, source_df=src)
-    fed = CYCLE
-    while time.perf_counter() - ctx.t0 < ctx.seconds:
-        fed += CYCLE
-        eng.replay(fed)
     ctx.end()
+    fed = CYCLE
     out.apply_s = ctx.t1 - ctx.t0
     out.events = SNAP_ROWS + fed
     window = [r for r in eng.metrics.read()
@@ -90,8 +88,9 @@ def run(ctx: Context) -> Outcome:
     out.commit_walls = [r["wall_sec"] for r in window]
     ctx.note(f"measured {len(window)} batches, {out.events} events")
 
-    # half a cycle more, outside the window, so the scans read the
-    # merge-on-read state a reader meets between compactions
+    # half a cycle more (two batches, two deltas per bucket), outside the
+    # window, so the scans read the merge-on-read state a reader meets
+    # between compactions
     fed += CYCLE // 2
     eng.replay(fed)
     batches = [r for r in eng.metrics.read()
@@ -99,7 +98,7 @@ def run(ctx: Context) -> Outcome:
     out.attempted += len(batches)
     out.lake_bytes = dir_bytes(eng.table.dir)
     _verify(ctx, eng, src, fed, batches, out)
-    ctx.scan([eng.table], out)
+    ctx.scan([eng.table], out, SCANS)
     ctx.note("scanned")
 
     if ctx.tracer:
@@ -112,18 +111,22 @@ def run(ctx: Context) -> Outcome:
 
 
 def _isolated_reduce(eng, fed: int) -> float:
-    """One batch's key-only reduce (the first phase of the ``refetch``
-    strategy the engine logs here) into the no-op sink."""
+    """One batch through the plan the ``refetch`` strategy reduces with
+    (the strategy the engine logs here), into the no-op sink: the
+    key-only changes, then the winning offset per key."""
     from sparkcdc import apply
     from sparkcdc.envelope import cdc_events
 
     cfg = eng.cfg
+    key = ["repo", "path"]
     env = cdc_events(eng.spark, BATCH, start=fed - BATCH, n_keys=cfg.n_keys,
                      n_parts=cfg.n_parts, seed=cfg.seed,
+                     hot_key_permille=cfg.hot_key_permille,
                      content_chars=cfg.content_chars)
-    keys = apply.envelopes_to_changes(env, ["repo", "path"])
-    return timed_noop(apply.reduce_last_write_wins(keys, ["repo", "path"],
-                                                   strategy="fat"))
+    winning = (apply.envelopes_to_changes(env, key).groupBy(*key)
+               .agg(F.max("offset").alias("offset"))
+               .select(F.col("offset").alias("id")))
+    return timed_noop(winning)
 
 
 def _verify(ctx, eng, src, fed, batches, out: Outcome) -> None:
