@@ -19,7 +19,7 @@ import re
 import shutil
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -206,6 +206,26 @@ class CdcEngine:
         #: under subject "<table>-value" — the registry leg of the
         #: Avro-converter deployment (see sparkcdc.schema_registry)
         self.schema_registry = None
+
+    def derived(self, writer_suffix: str) -> "CdcEngine":
+        """An engine over the same table whose fences live in the writer
+        namespace ``<writer><writer_suffix>``, so a streaming run's batch
+        ids (Spark's checkpointed ids) never collide with this engine's
+        batch ``replay`` ids. It inherits EVERY pluggable seam: a clone
+        that journaled schema changes to a default file store while the
+        caller configured another would strand the journal where restart
+        recovery never looks, and a missing offset mirror breaks the
+        sink-migration resume contract."""
+        eng = CdcEngine(
+            self.spark, self.table,
+            config=replace(self.cfg,
+                           writer=f"{self.cfg.writer}{writer_suffix}"),
+            signal_processor=self.signals,
+            history_store=self.schema_history.store,
+            offset_store=self.offset_store,
+        )
+        eng.schema_registry = self.schema_registry
+        return eng
 
     # -- checkpoint state -----------------------------------------------------
 

@@ -16,7 +16,9 @@ OR one stream of a shared schema plus regex include/exclude filters.
 
 from __future__ import annotations
 
+import copy
 import re
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,9 +77,8 @@ class MultiTableEngine:
 
     @staticmethod
     def _cfg_for(name: str, config: EngineConfig | None) -> EngineConfig:
-        base = config or EngineConfig()
         # distinct writer per table: fences are per (writer, table)
-        return EngineConfig(**{**base.__dict__, "writer": f"engine:{name}"})
+        return replace(config or EngineConfig(), writer=f"engine:{name}")
 
     def captures(self, name: str) -> bool:
         if self.include is not None:
@@ -117,28 +118,11 @@ class MultiTableEngine:
 
     def derived(self, writer_suffix: str) -> "MultiTableEngine":
         """A view over the same sink tables whose fences live in a
-        suffixed writer namespace — the multi-table form of the seam
-        ``streaming.start_stream`` uses so a streaming run's batch-id
-        sequence (Spark's checkpointed ids) can never collide with the
-        same tables' batch ``replay`` ids. Every pluggable seam of each
-        engine (history store, offset mirror, signals) is inherited."""
-        from dataclasses import replace
-
-        clone = MultiTableEngine.__new__(MultiTableEngine)
-        clone.spark = self.spark
-        clone.include, clone.exclude = self.include, self.exclude
-        clone.engines = {
-            name: CdcEngine(
-                eng.spark, eng.table,
-                config=replace(
-                    eng.cfg, writer=f"{eng.cfg.writer}{writer_suffix}"
-                ),
-                signal_processor=eng.signals,
-                history_store=eng.schema_history.store,
-                offset_store=eng.offset_store,
-            )
-            for name, eng in self.engines.items()
-        }
+        suffixed writer namespace: :meth:`CdcEngine.derived` per table,
+        so every pluggable seam of each engine is inherited."""
+        clone = copy.copy(self)
+        clone.engines = {name: eng.derived(writer_suffix)
+                         for name, eng in self.engines.items()}
         return clone
 
     def apply_batch(
@@ -146,29 +130,39 @@ class MultiTableEngine:
         offsets: dict | None = None, kind: str = "replay",
     ) -> dict[str, dict]:
         """Split one envelope micro-batch by ``source.table`` and apply each
-        slice to its table's engine. The batch is persisted so the (possibly
-        expensive) upstream is computed once for all tables.
+        slice to its table's engine.
 
         ``batch_id=None`` → each engine uses its own next id; an explicit
         id is applied to every engine (and fenced per engine). ``offsets``
         is shared: every table's checkpoint advances over the whole slice
         of the LOG, including tables the slice never touched — a restart
         must not re-read offsets any engine already covered."""
-        qualified = F.concat_ws(
-            ".", F.col("source.db"), F.col("source.table")
-        )
-        env = env.withColumn("__qtable", qualified).persist()
+        return self._split_apply(env, self.engines, batch_id, offsets, kind)
+
+    def _split_apply(
+        self, env: DataFrame, engines: dict[str, CdcEngine],
+        batch_id: int | None, offsets: dict | None, kind: str,
+    ) -> dict[str, dict]:
+        """The one ``source.table`` splitter: one filter per table over the
+        batch, persisted here unless the caller already did, so the
+        (possibly expensive) upstream is computed once for all tables."""
+        qualified = F.concat_ws(".", F.col("source.db"), F.col("source.table"))
+        owned = not env.is_cached
+        if owned:
+            env = env.persist()
         try:
-            out = {}
-            for name, eng in self.engines.items():
-                bid = batch_id if batch_id is not None else eng.committed_batch() + 1
-                part = env.filter(F.col("__qtable") == name).drop("__qtable")
-                out[name] = eng._apply_batch(
-                    part, batch_id=bid, kind=kind, offsets=offsets
+            return {
+                name: eng._apply_batch(
+                    env.filter(qualified == name),
+                    batch_id=(batch_id if batch_id is not None
+                              else eng.committed_batch() + 1),
+                    kind=kind, offsets=offsets,
                 )
-            return out
+                for name, eng in engines.items()
+            }
         finally:
-            env.unpersist()
+            if owned:
+                env.unpersist()
 
     def replay(
         self,
@@ -192,20 +186,8 @@ class MultiTableEngine:
                 if eng.committed_offset() < hi
             }
             if behind:
-                env = envelopes_for(lo, hi)
-                qualified = F.concat_ws(
-                    ".", F.col("source.db"), F.col("source.table")
-                )
-                env = env.withColumn("__qtable", qualified).persist()
-                try:
-                    for name, eng in behind.items():
-                        part = env.filter(F.col("__qtable") == name).drop("__qtable")
-                        eng._apply_batch(
-                            part, batch_id=eng.committed_batch() + 1,
-                            kind="replay", offsets={"lo": lo, "next": hi},
-                        )
-                finally:
-                    env.unpersist()
+                self._split_apply(envelopes_for(lo, hi), behind, None,
+                                  {"lo": lo, "next": hi}, "replay")
                 stats["batches"] += 1
                 stats["events"] += hi - lo
             lo = hi

@@ -72,11 +72,20 @@ class OffsetVector:
         return OffsetVector({**self.parts, part: next_offset})
 
 
-def partition_bounds(env_df) -> OffsetVector:
-    """Per-partition high-water marks of an envelope batch: one tiny
-    aggregation (`groupBy(part_id).max(offset)`), collected as ≤ #source-
-    partitions rows — the per-micro-batch lineage row of the north rule."""
+def batch_offsets(env_df) -> dict | None:
+    """The offsets of an envelope batch from ONE query: a per-partition
+    min/max of ``offset`` (``groupBy(part_id)``), collected as ≤ #source-
+    partitions rows. Returns the lineage the engine commits — ``lo``,
+    ``next`` (exclusive) and the per-partition high-water ``parts`` — or
+    None when the batch is empty (zero rows)."""
     from pyspark.sql import functions as F
 
-    rows = env_df.groupBy("part_id").agg(F.max("offset").alias("hi")).collect()
-    return OffsetVector({int(r["part_id"]): int(r["hi"]) + 1 for r in rows})
+    rows = env_df.groupBy("part_id").agg(
+        F.min("offset").alias("lo"), F.max("offset").alias("hi")
+    ).collect()
+    if not rows:
+        return None
+    parts = OffsetVector({int(r["part_id"]): int(r["hi"]) + 1 for r in rows})
+    return {"lo": min(int(r["lo"]) for r in rows),
+            "next": max(parts.parts.values()),
+            "parts": parts.to_summary()}

@@ -76,18 +76,20 @@ def split_at_boundaries(
     ``changes_to_apply_before`` is the evolution to run before applying
     that sub-range (None for the first unless a boundary == lo).
     The engine merges each sub-range separately so every MERGE sees one
-    schema (the micro-batch form of flush-on-schema-change).
+    schema (the micro-batch form of flush-on-schema-change). Several
+    changes at one offset yield empty sub-ranges ``(off, off, ch)`` in
+    their given order (the sort is by offset only, and stable), so each
+    applies in turn, at ``lo`` as mid-batch.
     """
     cuts = sorted(
-        (off, ch) for off, ch in boundaries if lo < off < hi
+        ((off, ch) for off, ch in boundaries if lo <= off < hi),
+        key=lambda c: c[0],
     )
-    pending = [ch for off, ch in boundaries if off == lo]
     out: list[tuple[int, int, list[dict] | None]] = []
-    cur = lo
-    first_changes = pending[0] if pending else None
+    cur, changes = lo, None
     for off, ch in cuts:
-        out.append((cur, off, first_changes))
-        first_changes = ch
-        cur = off
-    out.append((cur, hi, first_changes))
+        if off > cur or changes is not None:
+            out.append((cur, off, changes))
+        cur, changes = off, ch
+    out.append((cur, hi, changes))
     return out

@@ -21,11 +21,19 @@ micro-batch executor:
   reference (at-least-once + idempotent sink, EmbeddedEngine.java:885-902)
   with the idempotence made explicit. The streaming batch id is stable
   across redeliveries, so it IS the fence token.
+- one ``foreachBatch`` body serves both front-ends (:func:`start_stream`
+  and :func:`start_multi_stream`): it persists the micro-batch, probes its
+  offsets with ONE query (``offsets.batch_offsets``: per-partition
+  min/max; zero rows = empty batch, skipped) and hands batch, id and
+  offsets to the apply. Before the query starts, a checkpoint that has
+  no committed offsets under a fence that has committed stream batches
+  is refused (``ValueError``): Spark would restart its batch ids at 0
+  and the fence would drop every live batch.
 """
 
 from __future__ import annotations
 
-from dataclasses import replace
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +42,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .engine import CdcEngine
 from .envelope import cdc_events_over_ids
+from .offsets import batch_offsets
 
 
 def rate_envelope_stream(
@@ -129,10 +138,52 @@ def default_checkpoint_dir(engine: CdcEngine) -> str:
     fresh tempdir per run would restart ids at 0 while the table fence
     retains the prior run's last_batch, silently fencing out live batches
     (data loss). Deriving the dir from the table root makes restart-safety
-    the default."""
-    import os
-
+    the default; ``_start`` refuses a checkpoint that is behind the fence."""
     return os.path.join(engine.table.meta_dir, "stream_ckpt")
+
+
+def _start(
+    apply, engines: list[CdcEngine], envelope_stream: DataFrame,
+    checkpoint_dir: str, trigger_interval: str, available_now: bool,
+) -> StreamingQuery:
+    """The one ``foreachBatch`` front-end: guard the checkpoint against the
+    fences of ``engines``, then drain ``envelope_stream`` into ``apply``
+    (``CdcEngine._apply_batch`` or ``MultiTableEngine.apply_batch``)."""
+    fenced = [e.cfg.writer for e in engines if e.committed_batch() >= 0]
+    if fenced:
+        spark = envelope_stream.sparkSession
+        path = spark._jvm.org.apache.hadoop.fs.Path(checkpoint_dir, "offsets")
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not (fs.exists(path) and any(
+            st.getPath().getName().isdigit() for st in fs.listStatus(path)
+        )):
+            raise ValueError(
+                f"checkpoint {checkpoint_dir!r} has no committed offsets, "
+                f"but the fences of {fenced} hold committed stream "
+                f"batches: Spark would restart batch ids at 0 and the "
+                f"fences would drop every live batch. Restart with the "
+                f"checkpoint the stream last ran with."
+            )
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # persist ONCE: the offsets probe and the reduce->merge pipeline
+        # would otherwise each re-evaluate the micro-batch from source
+        batch_df = batch_df.persist()
+        try:
+            offsets = batch_offsets(batch_df)
+            if offsets is not None:
+                apply(batch_df, batch_id=batch_id, kind="stream",
+                      offsets=offsets)
+        finally:
+            batch_df.unpersist()
+
+    # availableNow = bounded backlog drain: process everything currently
+    # available, then stop (the batch-catchup mode of the connector)
+    trigger = ({"availableNow": True} if available_now
+               else {"processingTime": trigger_interval})
+    return (envelope_stream.writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger).start())
 
 
 def start_stream(
@@ -145,66 +196,19 @@ def start_stream(
 ) -> StreamingQuery:
     """Attach the engine to an envelope stream; returns the running query.
 
-    Fencing is scoped to a dedicated ``<writer>:stream`` namespace so a
-    batch ``replay`` on the same table (writer='engine', its own batch-id
-    sequence) can never collide with streaming batch ids. Batch offsets are
-    taken from the data (min/max of ``offset``), keeping the manifest's
-    lineage identical to batch replay; the engine clamps the committed
-    offset so a redelivered early batch can't regress the checkpoint."""
-    if checkpoint_dir is None:
-        checkpoint_dir = default_checkpoint_dir(engine)
-    # the derived engine must inherit EVERY pluggable seam of the outer
-    # one, not just the config: a streaming run that journaled schema
-    # changes to a default file store while the caller configured a
-    # table-backed one would strand the journal where restart recovery
-    # never looks, and a missing offset-store mirror breaks the
-    # sink-migration resume contract ("written after every committed
-    # batch", engine.py)
-    stream_engine = CdcEngine(
-        engine.spark, engine.table,
-        config=replace(engine.cfg, writer=f"{engine.cfg.writer}:stream"),
-        signal_processor=engine.signals,
-        history_store=engine.schema_history.store,
-        offset_store=engine.offset_store,
+    Fencing is scoped to a dedicated ``<writer>:stream`` namespace
+    (:meth:`CdcEngine.derived`) so a batch ``replay`` on the same table
+    (writer='engine', its own batch-id sequence) can never collide with
+    streaming batch ids. Batch offsets are taken from the data (one
+    per-partition min/max query), keeping the manifest's lineage identical
+    to batch replay; the engine clamps the committed offset so a
+    redelivered early batch can't regress the checkpoint."""
+    stream_engine = engine.derived(":stream")
+    return _start(
+        stream_engine._apply_batch, [stream_engine], envelope_stream,
+        checkpoint_dir or default_checkpoint_dir(engine),
+        trigger_interval, available_now,
     )
-    stream_engine.schema_registry = engine.schema_registry
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # persist ONCE: the bounds probe and the reduce->merge pipeline
-        # would otherwise each re-evaluate the micro-batch from source
-        batch_df = batch_df.persist()
-        try:
-            from .offsets import partition_bounds
-
-            bounds = batch_df.agg(
-                F.min("offset").alias("lo"), F.max("offset").alias("hi")
-            ).collect()[0]
-            # per-partition high-water vector (north rule): the same
-            # persisted batch feeds both probes, one tiny agg each
-            parts = partition_bounds(batch_df)
-            stream_engine._apply_batch(
-                batch_df,
-                batch_id=batch_id,
-                kind="stream",
-                offsets={"lo": int(bounds["lo"]),
-                         "next": int(bounds["hi"]) + 1,
-                         "parts": parts.to_summary()},
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = envelope_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        # bounded backlog drain: process everything currently available,
-        # then stop (the batch-catchup mode of the connector)
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def start_multi_stream(
@@ -217,57 +221,28 @@ def start_multi_stream(
 ) -> StreamingQuery:
     """One envelope stream → many sink tables: the streaming front-end of
     :class:`~sparkcdc.multitable.MultiTableEngine` (the reference's
-    one-connector/topic-per-table shape, §3.2). Each micro-batch is split
-    by ``source.table`` through the SAME splitter as batch
-    ``apply_batch`` and committed per table with the Spark streaming
-    batch id as the fence token — fences live in a dedicated
-    ``:stream``-suffixed writer namespace per table (via
-    :meth:`MultiTableEngine.derived`) so batch replays on the same
-    tables can never collide. The shared offset vector advances over the
-    whole slice for EVERY table, touched or not, so a restart never
-    re-reads offsets any table already covered.
+    one-connector/topic-per-table shape, §3.2). Each micro-batch goes
+    through the SAME ``source.table`` splitter as batch ``apply_batch`` and
+    is committed per table with the Spark streaming batch id as the fence
+    token — fences live in a dedicated ``:stream``-suffixed writer
+    namespace per table (via :meth:`MultiTableEngine.derived`) so batch
+    replays on the same tables can never collide. The shared offset vector
+    advances over the whole slice for EVERY table, touched or not, so a
+    restart never re-reads offsets any table already covered.
 
     The checkpoint dir defaults to ``multi_stream_ckpt`` under the
-    first captured table's meta dir — deterministic across restarts (a
-    fresh tempdir would reset Spark's batch ids to 0 under a retained
-    fence and silently drop live batches, same caveat as
-    ``start_stream``)."""
-    import os
-
+    first captured table's meta dir. A change to the captured set can
+    move that default; a restart whose checkpoint is then behind the
+    tables' fences raises instead of dropping live batches."""
     stream_mte = mte.derived(":stream")
     if checkpoint_dir is None:
         first = stream_mte.engines[min(stream_mte.engines)]
         checkpoint_dir = os.path.join(first.table.meta_dir,
                                       "multi_stream_ckpt")
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.persist()
-        try:
-            from .offsets import partition_bounds
-
-            bounds = batch_df.agg(
-                F.min("offset").alias("lo"), F.max("offset").alias("hi")
-            ).collect()[0]
-            parts = partition_bounds(batch_df)
-            stream_mte.apply_batch(
-                batch_df, batch_id=batch_id, kind="stream",
-                offsets={"lo": int(bounds["lo"]),
-                         "next": int(bounds["hi"]) + 1,
-                         "parts": parts.to_summary()},
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = envelope_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream_mte.apply_batch, list(stream_mte.engines.values()),
+        envelope_stream, checkpoint_dir, trigger_interval, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def stateful_lww_stream(

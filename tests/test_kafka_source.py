@@ -129,13 +129,12 @@ def test_engine_resumes_from_kafka_offsets(spark, tmp_root):
     kafka_env = envelopes_from_kafka(raw, c).persist()
 
     def apply_frame(eng, frame, batch_id):
-        from sparkcdc.offsets import partition_bounds
+        from sparkcdc.offsets import batch_offsets
 
-        parts = partition_bounds(frame)
+        parts = batch_offsets(frame)["parts"]
         eng._apply_batch(
             frame, batch_id=batch_id, kind="stream",
-            offsets={"lo": 0, "next": max(parts.parts.values(), default=0),
-                     "parts": parts.to_summary()},
+            offsets={"lo": 0, "next": max(parts.values()), "parts": parts},
         )
 
     cfg = EngineConfig(batch_size=1000, n_keys=25, n_parts=2)

@@ -40,11 +40,13 @@ def test_start_stream_engine_inherits_stores_and_registry(
     """The derived :stream engine must carry the outer engine's pluggable
     history store, offset-store mirror, and schema registry — a default
     file journal would strand schema changes where restart recovery
-    never looks."""
+    never looks. Both front-ends clone through ``CdcEngine.derived``."""
+    import sparkcdc.engine as engine
     import sparkcdc.streaming as streaming
+    from sparkcdc.multitable import MultiTableEngine
 
     captured = {}
-    real = streaming.CdcEngine
+    real = engine.CdcEngine
 
     class Recorder(real):
         def __init__(self, *a, **kw):
@@ -52,25 +54,33 @@ def test_start_stream_engine_inherits_stores_and_registry(
             super().__init__(*a, **kw)
             captured["engine"] = self
 
-    monkeypatch.setattr(streaming, "CdcEngine", Recorder)
-    hist, offs = MemoryHistoryStore(), MemoryOffsetStore()
-    eng = default_engine(
-        spark, tmp_root, n_buckets=4,
-        config=EngineConfig(batch_size=100, n_keys=10),
-        history_store=hist, offset_store=offs,
-    )
-    sentinel = object()
-    eng.schema_registry = sentinel
-    empty = os.path.join(tmp_root, "empty_in")
-    os.makedirs(empty, exist_ok=True)
-    q = streaming.start_stream(
-        eng, streaming.json_envelope_stream(eng, empty),
-        available_now=True,
-    )
-    q.awaitTermination(60)
-    assert captured["history_store"] is hist
-    assert captured["offset_store"] is offs
-    assert captured["engine"].schema_registry is sentinel
+    for multi in (False, True):
+        root = os.path.join(tmp_root, str(multi))
+        hist, offs = MemoryHistoryStore(), MemoryOffsetStore()
+        eng = default_engine(
+            spark, root, n_buckets=4,
+            config=EngineConfig(batch_size=100, n_keys=10),
+            history_store=hist, offset_store=offs,
+        )
+        sentinel = object()
+        eng.schema_registry = sentinel
+        empty = os.path.join(root, "empty_in")
+        os.makedirs(empty, exist_ok=True)
+        stream = streaming.json_envelope_stream(eng, empty)
+        captured.clear()
+        with monkeypatch.context() as mp:
+            mp.setattr(engine, "CdcEngine", Recorder)
+            if multi:
+                mte = MultiTableEngine(spark, {"db.t": eng.table})
+                mte.engines["db.t"] = eng
+                q = streaming.start_multi_stream(mte, stream,
+                                                 available_now=True)
+            else:
+                q = streaming.start_stream(eng, stream, available_now=True)
+        q.awaitTermination(60)
+        assert captured["history_store"] is hist
+        assert captured["offset_store"] is offs
+        assert captured["engine"].schema_registry is sentinel
 
 
 @pytest.mark.parametrize("fmt", [f for f in WIRE_FORMATS])

@@ -37,6 +37,23 @@ def test_split_boundary_at_lo_and_multiple():
     assert out == [(10, 50, ch1), (50, 100, ch2)]
 
 
+def test_split_several_changes_at_lo_all_apply():
+    assert split_at_boundaries(0, 10, [(0, "A"), (0, "B")]) == [
+        (0, 0, "A"), (0, 10, "B")]
+
+
+def test_split_ddl_strings_at_one_offset_keep_given_order():
+    out = split_at_boundaries(0, 10, [(5, "ALTER B"), (5, "ALTER A")])
+    assert out == [(0, 5, None), (5, 5, "ALTER B"), (5, 10, "ALTER A")]
+
+
+def test_split_change_lists_at_one_offset():
+    ch1 = [{"action": "add", "name": "x", "type": "int"}]
+    ch2 = [{"action": "add", "name": "y", "type": "int"}]
+    out = split_at_boundaries(0, 10, [(5, ch1), (5, ch2)])
+    assert out == [(0, 5, None), (5, 5, ch1), (5, 10, ch2)]
+
+
 def test_split_boundary_outside_range_ignored():
     ch = [{"action": "add", "name": "x", "type": "int"}]
     assert split_at_boundaries(0, 50, [(50, ch)]) == [(0, 50, None)]

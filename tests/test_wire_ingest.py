@@ -153,3 +153,54 @@ def test_multi_table_stream_matches_batch_split(spark, tmp_root):
     for name in ("code.repos_a", "code.repos_b"):
         stream_eng = mte.derived(":stream").engines[name]
         assert stream_eng.committed_offset() == 2000
+
+
+def test_stream_refuses_checkpoint_behind_fence(spark, tmp_root):
+    """Adding a captured table moves start_multi_stream's default
+    checkpoint (it lives under the alphabetically-first table). A restart
+    on that fresh checkpoint would restart Spark batch ids at 0 under the
+    retained fences of the old tables and silently drop live batches, so
+    it must raise and name the checkpoint. start_stream shares the guard."""
+    import re
+
+    import pytest
+
+    from sparkcdc.multitable import MultiTableEngine
+    from sparkcdc.streaming import default_checkpoint_dir, start_multi_stream
+    from sparkcdc.transforms.serialize import parse_envelope_json
+
+    root = os.path.join(tmp_root, "lake")
+    wire_dir = os.path.join(tmp_root, "wire")
+    env = cdc_events(spark, 200, n_keys=20, n_parts=4)
+    table = F.when(F.col("offset") % 2 == 0, "repos_b").otherwise("repos_c")
+    envelope_to_json(
+        env.withColumn("source", F.col("source").withField("table", table))
+    ).write.text(wire_dir)
+
+    def stream():
+        return parse_envelope_json(spark.readStream.text(wire_dir), None)
+
+    def mk(name):
+        return LakeTable.create(spark, root, name, fields=REPO_FIELDS,
+                                key_cols=["repo", "path"], n_buckets=2)
+
+    cfg = EngineConfig(n_keys=20, n_parts=4)
+    mte = MultiTableEngine(
+        spark, {f"code.{n}": mk(n) for n in ("repos_b", "repos_c")}, cfg)
+    start_multi_stream(mte, stream(), available_now=True).awaitTermination(120)
+    assert mte.derived(":stream").engines["code.repos_b"].committed_batch() == 0
+
+    tables = {f"code.{n}": LakeTable.load(spark, root, n)
+              for n in ("repos_b", "repos_c")}
+    tables["code.repos_a"] = mk("repos_a")
+    moved = os.path.join(tables["code.repos_a"].meta_dir, "multi_stream_ckpt")
+    with pytest.raises(ValueError, match=re.escape(moved)):
+        start_multi_stream(MultiTableEngine(spark, tables, cfg), stream(),
+                           available_now=True)
+
+    # start_stream shares the guard: the table's own stream fence is the
+    # multi-table one here, and its default checkpoint has never run
+    eng = mte.engines["code.repos_b"]
+    with pytest.raises(ValueError,
+                       match=re.escape(default_checkpoint_dir(eng))):
+        start_stream(eng, stream(), available_now=True)
