@@ -65,6 +65,26 @@ def _fast_local_conf() -> dict:
     return {"spark.local.dir": d}
 
 
+def _driver_heap_conf(meminfo: str = "/proc/meminfo") -> dict:
+    """Driver heap sized from the memory the host has available: 60% of
+    ``MemAvailable``, at least 1 GB and at most 24 GB (the size the
+    throughput GC was tuned at), with ``-Xms`` equal to the max so the
+    heap never resizes mid-measurement. The heap is not pre-touched:
+    committing it all at start on a host whose memory is shared can
+    invoke the OOM killer."""
+    with open(meminfo) as fh:
+        avail_kb = next(int(line.split()[1]) for line in fh
+                        if line.startswith("MemAvailable:"))
+    gb = max(1, min(24, int(avail_kb * 0.6 / 2**20)))
+    return {
+        # throughput GC: the envelope pipeline is allocation-heavy
+        # (strings), and a small heap turns the measurement into a GC
+        # benchmark — measured +17% at local[8], +/-0 at local[32]
+        "spark.driver.extraJavaOptions": f"-Xms{gb}g -XX:+UseParallelGC",
+        "spark.driver.memory": f"{gb}g",
+    }
+
+
 def _sf_of(path: str) -> float:
     base = os.path.basename(path.rstrip("/"))
     try:
@@ -187,13 +207,8 @@ def main() -> None:
     from sparkcdc.session import get_spark
 
     if "--scaling-worker" in sys.argv:
-        # one parallelism level, isolated in its own JVM.
-        # Fixed pre-touched heap: this sandbox VM backs guest memory
-        # lazily and near-serially (~0.1 GB/s first-touch, measured), so a
-        # growing heap page-faults mid-benchmark and the fault path — not
-        # the engine — caps scaling. Pre-touching moves that cost to
-        # startup, outside the measurement. On a real cluster this flag is
-        # simply standard executor hygiene (-Xms=-Xmx).
+        # one parallelism level, isolated in its own JVM, with a fixed
+        # heap (-Xms = max, see _driver_heap_conf)
         cores = int(sys.argv[sys.argv.index("--scaling-worker") + 1])
         # 2 tasks per core: a straggling task (OS jitter on a shared VM,
         # uneven zstd ratios) then costs half a task, not a whole stage
@@ -204,14 +219,8 @@ def main() -> None:
             f"sparkcdc-bench-{cores}", master=f"local[{cores}]",
             shuffle_partitions=cores * tpc,
             extra_conf={
-                # 24g pre-touched + throughput GC: the envelope pipeline is
-                # allocation-heavy (strings), and a small heap turns the
-                # measurement into a GC benchmark — measured +17% at
-                # local[8], +/-0 at local[32]; applied identically at both
-                # parallelism levels
-                "spark.driver.extraJavaOptions":
-                    "-Xms24g -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-                "spark.driver.memory": "24g",
+                # the same heap sizing at both parallelism levels
+                **_driver_heap_conf(),
                 **_fast_local_conf(),
             },
         )
@@ -269,13 +278,7 @@ def main() -> None:
 
     spark = get_spark(
         "sparkcdc-bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS,
-        extra_conf={
-            # fixed pre-touched heap + throughput GC — see --scaling-worker
-            "spark.driver.extraJavaOptions":
-                "-Xms24g -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-            "spark.driver.memory": "24g",
-            **_fast_local_conf(),
-        },
+        extra_conf={**_driver_heap_conf(), **_fast_local_conf()},
     )
     t_total0 = time.time()
 

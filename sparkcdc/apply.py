@@ -30,8 +30,10 @@ def envelopes_to_changes(
     src_map: dict[str, str | None] | None = None,
     null_types: dict[str, str] | None = None,
     null_defaults: dict[str, object] | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Flatten envelopes into change rows: row columns + _op + ordering.
+    """Flatten envelopes into change rows: row columns + _op + ordering
+    (+ the ``carry`` columns of the envelope, e.g. a table index).
 
     op mapping: r/c/u -> upsert of ``after``; d -> delete identified by
     ``before`` key columns; tombstones / t / m dropped.
@@ -65,6 +67,7 @@ def envelopes_to_changes(
         F.when(is_del, F.lit("d")).otherwise(F.lit("u")).alias("_op"),
         F.col("part_id"),
         F.col("offset"),
+        *carry,
     )
 
 

@@ -21,12 +21,13 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import apply as apply_mod
 from .envelope import REPO_KEY, REPO_ROW_FIELDS, cdc_events, snapshot_events
-from .lake import CommitConflict, LakeTable
+from .lake import (CommitConflict, LakeTable, Manifest, MergeCommit,
+                   merge_tables)
 from .metrics import MetricsLog
 from .sink import TableSink
 from .notifications import NotificationLog
@@ -418,12 +419,22 @@ class CdcEngine:
         start = self.committed_offset()
         batch_id = self.committed_batch() + 1
         self._catch_up_schema_journal()
-        applied_offsets = {e["offset"] for e in self.schema_history.entries()}
-        boundaries = [
-            (off, ch)
-            for off, ch in (schema_changes or [])
-            if off >= start and off not in applied_offsets
-        ]
+        # a change the journal already holds was applied before a restart;
+        # match each journaled entry to ONE change (not to its offset), so
+        # the rest of an offset's changes still apply after a crash
+        # between them
+        journal = [e for e in self.schema_history.entries()
+                   if e["offset"] >= start]
+        boundaries = []
+        for off, ch in schema_changes or []:
+            if off < start:
+                continue
+            hit = next((e for e in journal if _journaled_as(e, off, ch)),
+                       None)
+            if hit is None:
+                boundaries.append((off, ch))
+            else:
+                journal.remove(hit)
         stats = {"batches": 0, "events": 0, "wall_sec": 0.0}
         # flat slice plan, precomputed so the prefetcher can look one
         # slice ahead (batch grid and schema boundaries are both known
@@ -459,8 +470,9 @@ class CdcEngine:
                             self.notifications.notify(
                                 "Streaming", "PAUSED", offset=outer_lo)
                             break  # pause: stop consuming; resume re-enters
+                ddl = changes if isinstance(changes, str) else None
                 if changes:
-                    if isinstance(changes, str):
+                    if ddl is not None:
                         # DDL-string schema capture: parse the statement(s)
                         # against the current catalog into TableChanges-
                         # style evolutions (ddl.py; the reference's
@@ -475,13 +487,12 @@ class CdcEngine:
                         # HistoryRecord per statement).
                         from .ddl import parse_ddl_tolerant
 
-                        raw = changes
                         cur = {
                             f.name: f.type
                             for f in self.table.manifest().fields
                         }
                         parsed, skipped = parse_ddl_tolerant(
-                            raw, current_types=cur,
+                            ddl, current_types=cur,
                             only_table=self.table.name,
                         )
                         for stmt, err in skipped:
@@ -519,7 +530,7 @@ class CdcEngine:
                         # corrupt the schema (duplicate column)
                         self.schema_history.record(
                             sub_lo, changes,
-                            base_epoch=m.epoch,
+                            base_epoch=m.epoch, ddl=ddl,
                         )
                         self.table.evolve(changes)
                 if sub_hi <= sub_lo:
@@ -1226,7 +1237,8 @@ class CdcEngine:
         return "fat" if width <= 512 else "narrow_cached"
 
     def _merge_with_retry(
-        self, changes: DataFrame, *, batch_id: int, summary: dict, mode: str
+        self, changes: DataFrame, *, batch_id: int, summary: dict, mode: str,
+        conflict: CommitConflict | None = None,
     ) -> dict:
         """Commit with multi-writer conflict retry (optimistic concurrency,
         Iceberg-style): ``merge()`` re-reads the manifest at entry, so a
@@ -1234,25 +1246,30 @@ class CdcEngine:
         version — if the winner already committed THIS (writer, batch_id)
         the retry lands as a fenced no-op, so a batch is never applied
         twice. The loser's first-attempt data files become orphans that
-        ``expire_versions`` reclaims."""
+        ``expire_versions`` reclaims. ``conflict``: the first attempt
+        already lost its race (a table of a multi-table write), so this
+        starts at the first retry."""
         attempts = self.cfg.commit_retries
         delay = self.cfg.commit_retry_backoff_sec
         while True:
-            try:
-                return self.table.merge(
-                    changes, batch_id=batch_id, writer=self.cfg.writer,
-                    summary=summary, mode=mode,
-                )
-            except CommitConflict:
-                if attempts <= 0:
-                    raise
-                attempts -= 1
-                self.notifications.notify(
-                    "Commit", "CONFLICT_RETRY",
-                    batch_id=batch_id, remaining=attempts,
-                )
-                time.sleep(delay)
-                delay *= 2
+            if conflict is None:
+                try:
+                    return self.table.merge(
+                        changes, batch_id=batch_id, writer=self.cfg.writer,
+                        summary=summary, mode=mode,
+                    )
+                except CommitConflict as e:
+                    conflict = e
+            if attempts <= 0:
+                raise conflict
+            attempts -= 1
+            self.notifications.notify(
+                "Commit", "CONFLICT_RETRY",
+                batch_id=batch_id, remaining=attempts,
+            )
+            time.sleep(delay)
+            delay *= 2
+            conflict = None
 
     # -- core batch path --------------------------------------------------------
 
@@ -1263,56 +1280,20 @@ class CdcEngine:
         extra_summary: dict | None = None,
         source_ts_ms: int | None = None,
     ) -> dict:
-        t0 = time.time()
-        # fence FIRST: a redelivered batch must be a TOTAL no-op. Side
-        # effects below (truncate!, DLQ writes) before the merge's own
-        # fence would re-execute on redelivery — a redelivered truncate
-        # would wipe state the fenced merge then never restores.
-        if batch_id <= self.committed_batch():
-            return {
-                "version": self.table.current_version(),
-                "skipped": True, "reason": "fenced", "wall_sec": 0.0,
-            }
-        skips = [
-            s.strip() for s in self.cfg.skipped_operations.split(",")
-            if s.strip() and s.strip() != "none"
-        ]
-        if skips:
-            bad = set(skips) - {"c", "u", "d", "t"}
-            if bad:
-                raise ValueError(f"skipped_operations: unknown ops {bad}")
-            env = env.filter(~F.col("op").isin(skips))
-        for tf in self.cfg.transforms:
-            env = tf(env)
-        # the DLQ/truncate/tx probes below would each re-evaluate the whole
-        # upstream pipeline (source + transforms); persist the batch ONCE so
-        # every pass downstream — probes, quarantine write, the reduce —
-        # reads the cached envelope instead of recomputing it. The hot
-        # replay path (no DLQ/no truncate/no tx markers) stays persist-free.
-        persisted = (
-            self.cfg.dlq_enabled
-            or self.cfg.truncate_enabled
-            or self.cfg.provide_transaction_metadata
-        )
-        if persisted:
-            env = env.persist()
-        try:
-            return self._apply_batch_inner(
-                env, batch_id=batch_id, kind=kind, offsets=offsets,
-                mode=mode, t0=t0, refetch_ids=refetch_ids,
-                extra_summary=extra_summary, source_ts_ms=source_ts_ms,
-            )
-        finally:
-            if persisted:
-                env.unpersist()
+        """Apply one micro-batch to this engine's table: the one-engine
+        call of :func:`apply_batch_set`."""
+        return apply_batch_set(
+            [(None, self, batch_id)], env, kind=kind, offsets=offsets,
+            mode=mode, refetch_ids=refetch_ids, extra_summary=extra_summary,
+            source_ts_ms=source_ts_ms,
+        )[0]
 
-    def _apply_batch_inner(
-        self, env: DataFrame, *, batch_id: int, kind: str,
-        offsets: dict | None, mode: str | None, t0: float,
-        refetch_ids: Callable[[DataFrame], DataFrame] | None = None,
-        extra_summary: dict | None = None,
-        source_ts_ms: int | None = None,
-    ) -> dict:
+    def _plan_batch(
+        self, env: DataFrame, *, t: int, shared: bool, batch_id: int,
+        kind: str, offsets: dict | None, extra_summary: dict | None,
+    ) -> "_Plan":
+        """This table's side-effect passes (DLQ, transaction markers,
+        truncate) and everything its write needs from its manifest."""
         if self.cfg.dlq_enabled:
             env = self._quarantine_malformed(env, batch_id)
         if self.cfg.provide_transaction_metadata:
@@ -1342,74 +1323,6 @@ class CdcEngine:
                 self.table.delete_where("true", batch_id=batch_id)
                 env = env.filter(F.col("offset") > t_max)
         m = self.table.manifest()
-        row_cols = [f.name for f in m.fields]
-        src_map, null_types, null_defaults = self._reconcile_schema(env, m)
-        strategy = self.cfg.reduce_strategy
-        if strategy == "auto":
-            strategy = self._choose_strategy(kind, refetch_ids)
-        cached = False
-        if (
-            strategy == "refetch"
-            and refetch_ids is not None
-            and kind == "replay"
-        ):
-            # Two-phase reduce for seekable sources: phase 1 reduces a
-            # (key, offset)-only projection — Catalyst column pruning means
-            # the payload columns are never computed/fetched and map-side
-            # partial aggregation collapses the batch to ≤ #keys rows per
-            # task before the (tiny) shuffle. Phase 2 re-fetches ONLY the
-            # winning offsets' full records. Payload work: O(keys), not
-            # O(batch). (Kafka `seek`, log-store range reads, and the
-            # closed-form generator all support phase 2; cf. the
-            # reference's ReselectColumnsPostProcessor re-querying the
-            # source, core/processors/reselect/*.java:51.)
-            keys_only = apply_mod.envelopes_to_changes(
-                env, m.key_cols, src_map=src_map,
-                null_types=null_types, null_defaults=null_defaults,
-            )
-            winning = (
-                keys_only.groupBy(*m.key_cols)
-                .agg(F.max("offset").alias("offset"))
-                .select(F.col("offset").alias("id"))
-            )
-            env_w = refetch_ids(winning)
-            # the SMT chain ran on the phase-1 batch; re-fetched records
-            # need it too (projections like masking; filters re-apply
-            # idempotently)
-            for tf in self.cfg.transforms:
-                env_w = tf(env_w)
-            changes = apply_mod.envelopes_to_changes(
-                env_w, row_cols, src_map=src_map,
-                null_types=null_types, null_defaults=null_defaults,
-            ).select(*row_cols, "_op")  # one row per key by construction
-            chosen_strategy = "refetch"
-        else:
-            flat = apply_mod.envelopes_to_changes(
-                env, row_cols,
-                src_map=src_map, null_types=null_types,
-                null_defaults=null_defaults,
-            )
-            if strategy == "refetch":
-                strategy = "fat"  # non-replay batches / unseekable source
-            cached = strategy == "narrow_cached"
-            if cached:
-                # persist the flattened batch so the narrow semi-join's
-                # probe side reads the cache instead of re-evaluating the
-                # source; unpersisted after merge materializes the result
-                flat = flat.persist()
-                strategy = "narrow"
-            changes = apply_mod.reduce_last_write_wins(
-                flat, m.key_cols, salt_buckets=self.cfg.salt_buckets,
-                strategy=strategy,
-            ).select(*row_cols, "_op")
-            chosen_strategy = "narrow_cached" if cached else strategy
-        if self.cfg.reselect_unavailable_columns:
-            from .transforms.reselect import reselect_columns
-
-            changes = reselect_columns(
-                self.table.read(), m.key_cols,
-                self.cfg.reselect_unavailable_columns,
-            )(changes)
         # offsets=None (e.g. incremental snapshot: no stream progress) must
         # carry the prior checkpoint forward, not wipe it; and a batch whose
         # data-derived offsets lag the committed checkpoint (redelivered /
@@ -1435,42 +1348,14 @@ class CdcEngine:
             summary = {"offsets": merged}
         if extra_summary:
             summary.update(extra_summary)
-        # AQE policy (see EngineConfig.merge_adaptive): the fat/refetch
-        # plans are join-free, so AQE only adds per-stage driver sync —
-        # turn it off for exactly this execution and restore after
-        aqe_restore = None
-        if (
-            self.cfg.merge_adaptive == "auto"
-            and chosen_strategy in ("fat", "refetch")
-            and not self.cfg.reselect_unavailable_columns
-        ):
-            aqe_restore = self.spark.conf.get(
-                "spark.sql.adaptive.enabled", "true"
-            )
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            res = self._merge_with_retry(
-                changes, batch_id=batch_id, summary=summary,
-                mode=mode or self.cfg.commit_mode,
-            )
-            if cached:
-                flat.unpersist()
-            # MOR bookkeeping: fold down any bucket that has accumulated
-            # its delta budget (bounds read amplification + disk growth);
-            # the compaction is bucket-aligned and exchange-free
-            # (lake.compact)
-            if not res.get("skipped"):
-                due = {
-                    b for b, c in self.table.delta_counts().items()
-                    if c >= self.cfg.compact_max_deltas
-                }
-                if due:
-                    self.table.compact(buckets=due)
-        finally:
-            if aqe_restore is not None:
-                self.spark.conf.set(
-                    "spark.sql.adaptive.enabled", aqe_restore
-                )
+        return _Plan(self, t, shared, batch_id, env, m,
+                     self._reconcile_schema(env, m), summary)
+
+    def _finish_batch(
+        self, p: "_Plan", res: dict, *, kind: str, offsets: dict | None,
+        t0: float, strategy: str, source_ts_ms: int | None,
+    ) -> dict:
+        """After the commit: expiry, the metrics row, the offset mirror."""
         if self.cfg.expire_keep_last > 0:
             self.table.expire_versions(keep_last=self.cfg.expire_keep_last)
         wall = time.time() - t0
@@ -1485,23 +1370,298 @@ class CdcEngine:
                 int(time.time() * 1000) - source_ts_ms
             )
         self.metrics.record(
-            kind=kind, batch_id=batch_id, n_events=n_events,
+            kind=kind, batch_id=p.batch_id, n_events=n_events,
             offsets=offsets, wall_sec=round(wall, 3),
             version=res.get("version"), skipped=res.get("skipped", False),
             affected_buckets=res.get("affected_buckets"),
-            strategy=chosen_strategy, **extra_metrics,
+            strategy=strategy, **extra_metrics,
         )
         if (
             self.offset_store is not None
             and not res.get("skipped")
-            and summary.get("offsets")
+            and p.summary.get("offsets")
         ):
             # post-commit mirror (observability / sink migration); the
             # summary just committed is the authoritative copy. An
             # offset-less commit (empty dict) must NOT overwrite a
             # migrated resume point with nothing.
-            self.offset_store.save(summary["offsets"])
+            self.offset_store.save(p.summary["offsets"])
         return {**res, "wall_sec": wall}
+
+
+def _journaled_as(entry: dict, offset: int, change) -> bool:
+    """Whether schema-journal ``entry`` records the change ``(offset,
+    change)``: the same offset and changes, or for a DDL string the same
+    statement text. An entry whose identity is unknown — rebuilt by
+    recovery (``base_epoch`` None), or a DDL entry journaled without its
+    text — matches any change at its offset."""
+    if entry["offset"] != offset:
+        return False
+    if entry.get("base_epoch") is None:
+        return True
+    if isinstance(change, str):
+        return entry.get("ddl", change) == change
+    return entry["changes"] == change
+
+
+@dataclass
+class _Plan:
+    """One table's share of a batch, decided before the write."""
+
+    engine: CdcEngine
+    t: int  # the table's index in the batch set
+    shared: bool  # env is the whole batch, tagged with the ``__t`` index
+    batch_id: int
+    env: DataFrame
+    m: Manifest  # the table's manifest at plan time
+    reconcile: tuple  # _reconcile_schema(env, m)
+    summary: dict
+
+    def group_key(self) -> tuple:
+        """Tables that can share one reduce and one write: same lake root,
+        key and row schema, and the same envelope → row mapping. Any other
+        sink, or a table with its own slice, is a group of one."""
+        table = self.engine.table
+        if not (self.shared and isinstance(table, LakeTable)):
+            return ("own", self.t)
+        return (table.root, tuple(self.m.key_cols),
+                tuple((f.name, f.type) for f in self.m.fields),
+                repr(self.reconcile))
+
+
+def apply_batch_set(
+    batch: list[tuple[object, CdcEngine, int]], env: DataFrame, *,
+    kind: str, route: Column | None = None, offsets: dict | None = None,
+    mode: str | None = None,
+    refetch_ids: Callable[[DataFrame], DataFrame] | None = None,
+    extra_summary: dict | None = None, source_ts_ms: int | None = None,
+) -> list[dict]:
+    """Apply one micro-batch to every table of ``batch`` — a list of
+    (route value, engine, batch id) — as one job set: plan, write, commit,
+    finish. Returns one result per entry.
+
+    ``route`` (multi-table): a Column naming each row's table; a row goes
+    to the entry whose route value it equals, and rows of no entry drop
+    out. The engines share one config but for the writer. One engine and
+    no route is :meth:`CdcEngine._apply_batch`.
+
+    1. Fence: a table whose writer already committed its batch id drops
+       out before anything runs.
+    2. Plan: op filter and transforms once; per table, its side-effect
+       passes (only when DLQ, transaction markers or truncate are on —
+       those, and reselect, give each table its own slice) and its
+       offsets summary. The strategy and the AQE toggle are decided once.
+    3. Write: per group of tables with one row schema and key
+       (:meth:`_Plan.group_key`), one flatten and one reduce keyed by
+       (table, key), then :func:`~sparkcdc.lake.merge_tables`: one
+       (table, bucket)-partitioned write and one manifest flip per table.
+       A table that loses its flip race retries alone.
+    4. Finish, per table: compaction when due, expiry, metrics row and
+       offset mirror."""
+    t0 = time.time()
+    out: list[dict | None] = [None] * len(batch)
+    live = []
+    for t, (_, eng, bid) in enumerate(batch):
+        # fence FIRST: a redelivered batch must be a TOTAL no-op. Side
+        # effects below (truncate!, DLQ writes) before the merge's own
+        # fence would re-execute on redelivery — a redelivered truncate
+        # would wipe state the fenced merge then never restores.
+        if bid <= eng.committed_batch():
+            out[t] = {
+                "version": eng.table.current_version(),
+                "skipped": True, "reason": "fenced", "wall_sec": 0.0,
+            }
+        else:
+            live.append(t)
+    if not live:
+        return out
+    lead = batch[live[0]][1]
+    cfg = lead.cfg
+    skips = [
+        s.strip() for s in cfg.skipped_operations.split(",")
+        if s.strip() and s.strip() != "none"
+    ]
+    if skips:
+        bad = set(skips) - {"c", "u", "d", "t"}
+        if bad:
+            raise ValueError(f"skipped_operations: unknown ops {bad}")
+        env = env.filter(~F.col("op").isin(skips))
+    for tf in cfg.transforms:
+        env = tf(env)
+    if route is not None:
+        index = F.create_map(*[F.lit(x) for t in live
+                               for x in (batch[t][0], t)])
+        env = env.withColumn("__t", index[route]).filter(
+            F.col("__t").isNotNull())
+    # the DLQ/truncate/tx probes would each re-evaluate the whole
+    # upstream pipeline (source + transforms); persist the batch ONCE so
+    # every pass downstream — probes, quarantine write, the reduce —
+    # reads the cached envelope instead of recomputing it. The hot
+    # replay path (no DLQ/no truncate/no tx markers) stays persist-free.
+    persisted = (cfg.dlq_enabled or cfg.truncate_enabled
+                 or cfg.provide_transaction_metadata)
+    own = route is not None and bool(
+        persisted or cfg.reselect_unavailable_columns)
+    if persisted:
+        env = env.persist()
+    try:
+        plans = [
+            batch[t][1]._plan_batch(
+                env.filter(F.col("__t") == t).drop("__t") if own else env,
+                t=t, shared=route is not None and not own,
+                batch_id=batch[t][2], kind=kind, offsets=offsets,
+                extra_summary=extra_summary,
+            )
+            for t in live
+        ]
+        strategy = cfg.reduce_strategy
+        if strategy == "auto":
+            strategy = lead._choose_strategy(kind, refetch_ids)
+        if strategy == "refetch" and (
+            refetch_ids is None or kind != "replay" or route is not None
+        ):
+            # non-replay batches, unseekable sources, and multi-table
+            # batches (re-fetched rows carry no table index)
+            strategy = "fat"
+        groups: dict[tuple, list[_Plan]] = {}
+        for p in plans:
+            groups.setdefault(p.group_key(), []).append(p)
+        # AQE policy (see EngineConfig.merge_adaptive): the fat/refetch
+        # plans are join-free, so AQE only adds per-stage driver sync —
+        # turn it off for exactly this execution and restore after
+        aqe_restore = None
+        if (
+            cfg.merge_adaptive == "auto"
+            and strategy in ("fat", "refetch")
+            and not cfg.reselect_unavailable_columns
+        ):
+            aqe_restore = lead.spark.conf.get(
+                "spark.sql.adaptive.enabled", "true"
+            )
+            lead.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        results: dict[int, dict] = {}
+        try:
+            for group in groups.values():
+                results.update(_write_group(
+                    group, cfg, strategy=strategy, refetch_ids=refetch_ids,
+                    mode=mode or cfg.commit_mode, split=len(groups) > 1,
+                ))
+            # MOR bookkeeping: fold down any bucket that has accumulated
+            # its delta budget (bounds read amplification + disk growth);
+            # the compaction is bucket-aligned and exchange-free
+            # (lake.compact)
+            for p in plans:
+                if results[p.t].get("skipped"):
+                    continue
+                table = p.engine.table
+                due = {
+                    b for b, c in table.delta_counts().items()
+                    if c >= cfg.compact_max_deltas
+                }
+                if due:
+                    table.compact(buckets=due)
+        finally:
+            if aqe_restore is not None:
+                lead.spark.conf.set(
+                    "spark.sql.adaptive.enabled", aqe_restore
+                )
+        for p in plans:
+            out[p.t] = p.engine._finish_batch(
+                p, results[p.t], kind=kind, offsets=offsets, t0=t0,
+                strategy=strategy, source_ts_ms=source_ts_ms,
+            )
+    finally:
+        if persisted:
+            env.unpersist()
+    return out
+
+
+def _write_group(
+    group: list[_Plan], cfg: EngineConfig, *, strategy: str,
+    refetch_ids, mode: str, split: bool,
+) -> dict[int, dict]:
+    """One flatten, one reduce keyed by (table, key) and one write for a
+    group of tables; returns each table's commit result. ``split``: other
+    groups share the batch, so keep this group's rows only."""
+    p0 = group[0]
+    m = p0.m
+    src_map, null_types, null_defaults = p0.reconcile
+    row_cols = [f.name for f in m.fields]
+    carry = ("__t",) if p0.shared else ()
+    env = p0.env
+    if p0.shared and split:
+        env = env.filter(F.col("__t").isin([p.t for p in group]))
+    flatten = dict(src_map=src_map, null_types=null_types,
+                   null_defaults=null_defaults, carry=carry)
+    cached = None
+    if strategy == "refetch":
+        # Two-phase reduce for seekable sources: phase 1 reduces a
+        # (key, offset)-only projection — Catalyst column pruning means
+        # the payload columns are never computed/fetched and map-side
+        # partial aggregation collapses the batch to ≤ #keys rows per
+        # task before the (tiny) shuffle. Phase 2 re-fetches ONLY the
+        # winning offsets' full records. Payload work: O(keys), not
+        # O(batch). (Kafka `seek`, log-store range reads, and the
+        # closed-form generator all support phase 2; cf. the
+        # reference's ReselectColumnsPostProcessor re-querying the
+        # source, core/processors/reselect/*.java:51.)
+        keys_only = apply_mod.envelopes_to_changes(env, m.key_cols, **flatten)
+        winning = (
+            keys_only.groupBy(*m.key_cols)
+            .agg(F.max("offset").alias("offset"))
+            .select(F.col("offset").alias("id"))
+        )
+        env_w = refetch_ids(winning)
+        # the SMT chain ran on the phase-1 batch; re-fetched records
+        # need it too (projections like masking; filters re-apply
+        # idempotently)
+        for tf in cfg.transforms:
+            env_w = tf(env_w)
+        # one row per key by construction
+        changes = apply_mod.envelopes_to_changes(env_w, row_cols, **flatten)
+    else:
+        flat = apply_mod.envelopes_to_changes(env, row_cols, **flatten)
+        if strategy == "narrow_cached":
+            # persist the flattened batch so the narrow semi-join's
+            # probe side reads the cache instead of re-evaluating the
+            # source; unpersisted once the commit materialized the result
+            cached = flat = flat.persist()
+        changes = apply_mod.reduce_last_write_wins(
+            flat, [*carry, *m.key_cols], salt_buckets=cfg.salt_buckets,
+            strategy="narrow" if cached is not None else strategy,
+        )
+    changes = changes.select(*row_cols, "_op", *carry)
+    if cfg.reselect_unavailable_columns:
+        from .transforms.reselect import reselect_columns
+
+        changes = reselect_columns(
+            p0.engine.table.read(), m.key_cols,
+            cfg.reselect_unavailable_columns,
+        )(changes)
+    if len(group) == 1:
+        first: dict = {p0.t: None}
+    else:
+        first = merge_tables(changes, {
+            p.t: MergeCommit(p.engine.table, p.batch_id, p.engine.cfg.writer,
+                             p.summary, mode)
+            for p in group
+        })
+    results = {}
+    for p in group:
+        res = first[p.t]
+        if not isinstance(res, dict):
+            # not attempted yet (one table), or this table lost its flip
+            # race (CommitConflict): commit it alone, with retries
+            res = p.engine._merge_with_retry(
+                changes.filter(F.col("__t") == p.t).drop("__t")
+                if carry else changes,
+                batch_id=p.batch_id, summary=p.summary, mode=mode,
+                conflict=res,
+            )
+        results[p.t] = res
+    if cached is not None:
+        cached.unpersist()
+    return results
 
 
 def default_engine(

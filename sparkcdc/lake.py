@@ -46,7 +46,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -247,6 +247,138 @@ def _exclusive_write(path: str, text: str) -> None:
         os.fsync(fh.fileno())
 
 
+#: merge writes land in ``<root>/_staging/<uuid>/__t=<i>/b=<bucket>``
+#: first; each table's ``__t=<i>`` slice is then renamed into its own
+#: commit dir
+STAGING_DIR = "_staging"
+
+#: an unreferenced dir younger than this may be a concurrent writer's
+#: in-flight write, so the orphan sweep leaves it alone
+ORPHAN_GRACE_SEC = 600
+
+
+def bucket_of(key_cols: list[str], n_buckets):
+    """``pmod(xxhash64(BUCKET_HASH_SEED, key), n)`` — the on-disk bucket
+    invariant. ``n_buckets`` is an int or a Column (per-row bucket count
+    of a multi-table write)."""
+    n = n_buckets if isinstance(n_buckets, Column) else F.lit(n_buckets)
+    return F.pmod(
+        F.xxhash64(F.lit(BUCKET_HASH_SEED), *[F.col(c) for c in key_cols]), n
+    ).cast("int")
+
+
+def _newest_mtime(path: str) -> float:
+    """Latest mtime of ``path`` or anything below it: a Spark write in
+    progress touches only its task files, not the dirs above them."""
+    newest = os.path.getmtime(path)
+    for top, dirs, files in os.walk(path):
+        for n in dirs + files:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(top, n)))
+            except FileNotFoundError:
+                pass
+    return newest
+
+
+@dataclass
+class MergeCommit:
+    """One table's share of a merge write: the fence and summary it
+    commits with."""
+
+    table: "LakeTable"
+    batch_id: int
+    writer: str = "default"
+    summary: dict | None = None
+    mode: str = "cow"
+
+
+def merge_tables(
+    changes: DataFrame, commits: dict[int, MergeCommit]
+) -> dict[int, "dict | CommitConflict"]:
+    """Write reduced change batches of several tables in ONE Spark job,
+    then commit each table on its own.
+
+    ``changes``: the row columns + ``_op`` + ``__t``, the integer index of
+    the row's table in ``commits``; one row per (``__t``, key). The
+    tables must share row schema, key columns and lake root. Steps:
+
+    1. fenced tables (``batch_id`` <= their writer's last batch) drop out;
+    2. every row gets its own table's bucket (a literal map lookup of
+       ``n_buckets``), and the batch is written once, partitioned by
+       (table, bucket), into ``<root>/_staging/<uuid>`` — one file per
+       (table, bucket);
+    3. per table: ``os.rename`` its ``__t=<i>`` slice into
+       ``data/commit-<new version>-<uuid>`` (manifest paths stay
+       table-relative), then one manifest CAS flip with its own fence.
+
+    A table whose manifest lists no files gets its rows as base files,
+    deletes dropped (no reconcile cost ever after). Returns per index the
+    commit result, or the ``CommitConflict`` that table's flip lost — the
+    other tables' commits stand, and the caller retries only the loser.
+    A crash between flips leaves the flipped tables fenced for the batch
+    and the rest behind; a crash before a rename leaves a staging dir,
+    which ``expire_versions`` reclaims once it is ``ORPHAN_GRACE_SEC``
+    old. :meth:`LakeTable.merge` is the one-table call."""
+    out: dict[int, dict | CommitConflict] = {}
+    ms = {}
+    for t, c in commits.items():
+        if c.mode not in ("cow", "mor"):
+            # explicit: a legacy positional `scope` argument landing here
+            # must fail loudly, not silently become a merge-on-read commit
+            raise ValueError(f"unknown merge mode {c.mode!r} (cow|mor)")
+        m = c.table.manifest()
+        if not m.key_cols:
+            raise ValueError(
+                "keyless table (primary.key.mode=none) is insert-only — "
+                "use append()"
+            )
+        last = m.summary.get("last_batch", {}).get(c.writer)
+        if last is not None and c.batch_id <= last:
+            out[t] = {"version": m.version, "skipped": True,
+                      "reason": "fenced"}
+        else:
+            ms[t] = m
+    if not ms:
+        return out
+    m0 = ms[min(ms)]
+    # enforce the manifest schema (casts cover widened types; the sink
+    # owns the final type, K3)
+    data = changes.select(
+        *[F.col(f.name).cast(type_of(f.type)).alias(f.name)
+          for f in m0.fields],
+        "_op", F.col("__t").cast("int").alias("__t"),
+    )
+    if len(ms) < len(commits):
+        data = data.filter(F.col("__t").isin(list(ms)))
+    sizes = {t: m.n_buckets for t, m in ms.items()}
+    n = (next(iter(sizes.values())) if len(set(sizes.values())) == 1
+         else F.create_map(*[F.lit(x) for t in sizes
+                             for x in (t, sizes[t])])[F.col("__t")])
+    data = data.withColumn("b", bucket_of(m0.key_cols, n))
+    empty = [t for t, m in ms.items() if not m.files]
+    if len(empty) == len(ms):
+        data = data.filter(F.col("_op") != "d").drop("_op")
+    elif empty:
+        data = data.filter(
+            (F.col("_op") != "d") | ~F.col("__t").isin(empty))
+    staging = os.path.join(commits[min(ms)].table.root, STAGING_DIR,
+                           uuid.uuid4().hex)
+    try:
+        # co-locate each (table, bucket) in one task before partitionBy,
+        # else every task writes a file per bucket (tasks × buckets tiny
+        # files — read amplification on every subsequent merge)
+        data.repartition(sum(sizes.values()), "__t", "b").write.partitionBy(
+            "__t", "b").parquet(staging)
+        for t, m in ms.items():
+            out[t] = commits[t].table._commit_merge(
+                m, commits[t], os.path.join(staging, f"__t={t}"),
+                kind="base" if t in empty else "delta",
+            )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return out
+
+
 class LakeTable:
     """One versioned table rooted at ``<root>/<name>``."""
 
@@ -393,10 +525,6 @@ class LakeTable:
 
     # -- read (with field-id schema mapping + time travel) -------------------
 
-    def _bucket_expr(self, key_cols: list[str], n_buckets: int):
-        return F.pmod(F.xxhash64(F.lit(BUCKET_HASH_SEED), *[F.col(c) for c in key_cols]),
-                      F.lit(n_buckets)).cast("int")
-
     def read(
         self,
         version: int | None = None,
@@ -468,7 +596,7 @@ class LakeTable:
         index. The collect is O(distinct buckets), bounded by
         ``n_buckets`` ints, never data."""
         m = self.manifest()
-        b = self._bucket_expr(m.key_cols, m.n_buckets)
+        b = bucket_of(m.key_cols, m.n_buckets)
         return {
             r[0]
             for r in keys_df.select(b.alias("__bucket")).distinct().collect()
@@ -559,8 +687,15 @@ class LakeTable:
             # files — read amplification on every subsequent merge)
             data = data.repartition(n_buckets, F.col("b"))
         data.write.mode("overwrite").partitionBy("b").parquet(out_dir)
+        return self._entries(rel, self.manifest().epoch, kind=kind, seq=seq)
+
+    def _entries(
+        self, rel: str, epoch: int, *, kind: str, seq: int
+    ) -> list[dict]:
+        """Manifest entries for the ``b=<bucket>`` parquet files of the
+        commit dir ``rel`` (table-relative)."""
         entries = []
-        m_epoch = self.manifest().epoch
+        out_dir = os.path.join(self.dir, rel)
         for bdir in os.listdir(out_dir):
             if not bdir.startswith("b="):
                 continue
@@ -569,7 +704,7 @@ class LakeTable:
                 if fn.endswith(".parquet"):
                     entries.append(
                         {"path": os.path.join(rel, bdir, fn), "bucket": bucket,
-                         "epoch": m_epoch, "kind": kind, "seq": seq}
+                         "epoch": epoch, "kind": kind, "seq": seq}
                     )
         return entries
 
@@ -581,7 +716,7 @@ class LakeTable:
         tag = f"{m.version + 1}-{uuid.uuid4().hex[:8]}"
         data = df.select(
             *[F.col(f.name).cast(type_of(f.type)).alias(f.name) for f in m.fields]
-        ).withColumn("__bucket", self._bucket_expr(m.key_cols, m.n_buckets))
+        ).withColumn("__bucket", bucket_of(m.key_cols, m.n_buckets))
         entries = self._write_data(data, tag, seq=m.version + 1)
         new = Manifest(
             version=m.version + 1, parent=m.version, n_buckets=m.n_buckets,
@@ -629,7 +764,7 @@ class LakeTable:
         names = [f.name for f in m.fields]
         data = rows.select(
             *[F.col(f.name).cast(type_of(f.type)).alias(f.name) for f in m.fields]
-        ).withColumn("__bucket", self._bucket_expr(names, m.n_buckets))
+        ).withColumn("__bucket", bucket_of(names, m.n_buckets))
         entries = self._write_data(data, tag, kind="base", seq=new_version)
         last_batch = dict(m.summary.get("last_batch", {}))
         last_batch[writer] = batch_id
@@ -680,74 +815,63 @@ class LakeTable:
           partitioned join: the on-disk invariant bucket =
           pmod(xxhash64(seed, key), N) makes co-location free).
 
-        Reference sink semantics unchanged: jdbc-sink/
-        JdbcChangeEventSink.java:72-158, dialect MERGE at
-        dialect/sqlserver/SqlServerDatabaseDialect.java:128-130.
+        This is the one-table call of :func:`merge_tables`, which a
+        multi-table batch uses to write every table in one job. Reference
+        sink semantics unchanged: jdbc-sink/JdbcChangeEventSink.java:72-158,
+        dialect MERGE at dialect/sqlserver/SqlServerDatabaseDialect.java:
+        128-130. A lost commit race raises ``CommitConflict``.
         """
-        if mode not in ("cow", "mor"):
-            # explicit: a legacy positional `scope` argument landing here
-            # must fail loudly, not silently become a merge-on-read commit
-            raise ValueError(f"unknown merge mode {mode!r} (cow|mor)")
-        m = self.manifest()
-        if not m.key_cols:
-            raise ValueError(
-                "keyless table (primary.key.mode=none) is insert-only — "
-                "use append()"
-            )
-        last = m.summary.get("last_batch", {}).get(writer)
-        if last is not None and batch_id <= last:
-            return {"version": m.version, "skipped": True, "reason": "fenced"}
+        res = merge_tables(
+            changes.withColumn("__t", F.lit(0)),
+            {0: MergeCommit(self, batch_id, writer, summary, mode)},
+        )[0]
+        if isinstance(res, CommitConflict):
+            raise res
+        return res
 
+    def _commit_merge(
+        self, m: Manifest, c: MergeCommit, staged: str, *, kind: str
+    ) -> "dict | CommitConflict":
+        """Adopt this table's staged slice (``staged``, a dir of
+        ``b=<bucket>`` parquet dirs; absent when the batch has no row for
+        the table) as commit ``m.version + 1`` and flip the manifest. The
+        offsets and fence commit even with no rows."""
         new_version = m.version + 1
         tag = f"{new_version}-{uuid.uuid4().hex[:8]}"
-        # enforce the manifest schema (casts cover widened types; the sink
-        # owns the final type, K3)
-        data = changes.select(
-            *[F.col(f.name).cast(type_of(f.type)).alias(f.name) for f in m.fields],
-            "_op",
-        ).withColumn("__bucket", self._bucket_expr(m.key_cols, m.n_buckets))
-
-        if not m.files:
-            # empty table: a delta with nothing underneath IS the base —
-            # write it as such (minus delete markers) and skip reconcile
-            # cost forever after (snapshot loads / first replay batch)
-            data = data.filter(F.col("_op") != "d").drop("_op")
-            entries = self._write_data(data, tag, kind="base", seq=new_version)
-            affected = {e["bucket"] for e in entries}
-            files = list(entries)
-        else:
-            entries = self._write_data(data, tag, kind="delta", seq=new_version)
-            # affected buckets fall out of the partitioned write — no
-            # pre-pass, no persist, no distinct-collect
-            affected = {e["bucket"] for e in entries}
-            if mode == "cow" and affected:
-                old_aff = [f for f in m.files if f["bucket"] in affected]
-                base_entries = self._compact_files(
-                    m, old_aff + entries, f"{tag}-c", seq=new_version
-                )
-                kept = [f for f in m.files if f["bucket"] not in affected]
-                files = kept + base_entries
-                # the intra-commit delta files are referenced by no
-                # manifest — remove their dir eagerly
-                shutil.rmtree(
-                    os.path.join(self.dir, "data", f"commit-{tag}"),
-                    ignore_errors=True,
-                )
-            else:
-                files = m.files + entries
-
+        rel = os.path.join("data", f"commit-{tag}")
+        entries = []
+        if os.path.isdir(staged):
+            os.rename(staged, os.path.join(self.dir, rel))
+            entries = self._entries(rel, m.epoch, kind=kind, seq=new_version)
+        # affected buckets fall out of the partitioned write — no
+        # pre-pass, no persist, no distinct-collect
+        affected = {e["bucket"] for e in entries}
+        files = m.files + entries
+        if kind == "delta" and c.mode == "cow" and affected:
+            old_aff = [f for f in m.files if f["bucket"] in affected]
+            base_entries = self._compact_files(
+                m, old_aff + entries, f"{tag}-c", seq=new_version
+            )
+            files = [f for f in m.files if f["bucket"] not in affected]
+            files += base_entries
+            # the intra-commit delta files are referenced by no
+            # manifest — remove their dir eagerly
+            shutil.rmtree(os.path.join(self.dir, rel), ignore_errors=True)
         last_batch = dict(m.summary.get("last_batch", {}))
-        last_batch[writer] = batch_id
+        last_batch[c.writer] = c.batch_id
         new = Manifest(
             version=new_version, parent=m.version, n_buckets=m.n_buckets,
             key_cols=m.key_cols, epoch=m.epoch, epochs=m.epochs,
             files=files,
             summary=self._carry_summary(
-                m, **(summary or {}), op="merge", mode=mode,
-                batch_id=batch_id, writer=writer, last_batch=last_batch,
+                m, **(c.summary or {}), op="merge", mode=c.mode,
+                batch_id=c.batch_id, writer=c.writer, last_batch=last_batch,
                 affected_buckets=sorted(affected)),
         )
-        self._write_manifest(new)
+        try:
+            self._write_manifest(new)
+        except CommitConflict as e:
+            return e
         return {
             "version": new.version,
             "skipped": False,
@@ -939,7 +1063,7 @@ class LakeTable:
                     "rewritten_buckets": len({f["bucket"] for f in m.files})}
         # keyless (append-mode) tables bucket by all columns — mirror that
         bucket_cols = m.key_cols or names
-        bucket_col = self._bucket_expr(bucket_cols, m.n_buckets)
+        bucket_col = bucket_of(bucket_cols, m.n_buckets)
         matched = {
             r[0]
             for r in self.read().filter(predicate)
@@ -1073,7 +1197,21 @@ class LakeTable:
                     fn.endswith(".parquet")
                     for _, _, fns in os.walk(full) for fn in fns
                 )
-                and time.time() - os.path.getmtime(full) > 600
+                and time.time() - os.path.getmtime(full) > ORPHAN_GRACE_SEC
             ):
                 shutil.rmtree(full)
+        # staging residue: a crash after a merge write and before its
+        # renames leaves <root>/_staging/<uuid>, referenced by nothing.
+        # Age-gated like the empty dirs above: a concurrent batch's
+        # staging dir is in flight until it has been renamed away
+        staging = os.path.join(self.root, STAGING_DIR)
+        if os.path.isdir(staging):
+            for d in os.listdir(staging):
+                full = os.path.join(staging, d)
+                try:
+                    age = time.time() - _newest_mtime(full)
+                except FileNotFoundError:  # its writer just finished
+                    continue
+                if age > ORPHAN_GRACE_SEC:
+                    shutil.rmtree(full, ignore_errors=True)
         return removed

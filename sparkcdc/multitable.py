@@ -5,13 +5,18 @@ routes each change to its own topic/sink table (table include/exclude at
 RelationalDatabaseConnectorConfig.java:267-355, per-table key/value schemas
 via TableSchemaBuilder, per-topic sinks in JdbcChangeEventSink). The Spark
 form: a ``MultiTableEngine`` owns one ``CdcEngine`` per captured table and
-splits each micro-batch by ``source.table`` — one filter per table over the
-same cached batch, so the stream is read once and each table's slice goes
-through the standard reduce→MERGE path with its own fence and offsets.
+applies each micro-batch to all of them as ONE job set
+(:func:`~sparkcdc.engine.apply_batch_set`): the batch is flattened once
+with a table index column, reduced once keyed by (table, key), and written
+once partitioned by (table, bucket); each table's slice is then renamed
+into its own commit dir and committed with its own fence and offsets. So
+the Spark jobs per batch do not grow with the number of tables.
 
 Heterogeneous row schemas are supported by letting each table's envelopes
-carry their own before/after struct: the splitter takes a dict of streams
-OR one stream of a shared schema plus regex include/exclude filters.
+carry their own before/after struct: tables group by (row schema, key),
+and each group gets its own reduce and write. The splitter takes a dict of
+streams OR one stream of a shared schema plus regex include/exclude
+filters.
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import CdcEngine, EngineConfig
+from .engine import CdcEngine, EngineConfig, apply_batch_set
 from .lake import LakeTable
 from .sinkconfig import resolve_message_key
 
@@ -129,8 +134,8 @@ class MultiTableEngine:
         self, env: DataFrame, batch_id: int | None,
         offsets: dict | None = None, kind: str = "replay",
     ) -> dict[str, dict]:
-        """Split one envelope micro-batch by ``source.table`` and apply each
-        slice to its table's engine.
+        """Apply one envelope micro-batch, routed by ``source.table``, to
+        every captured table.
 
         ``batch_id=None`` → each engine uses its own next id; an explicit
         id is applied to every engine (and fenced per engine). ``offsets``
@@ -143,23 +148,23 @@ class MultiTableEngine:
         self, env: DataFrame, engines: dict[str, CdcEngine],
         batch_id: int | None, offsets: dict | None, kind: str,
     ) -> dict[str, dict]:
-        """The one ``source.table`` splitter: one filter per table over the
-        batch, persisted here unless the caller already did, so the
-        (possibly expensive) upstream is computed once for all tables."""
+        """The one ``source.table`` splitter: one job set for all of
+        ``engines`` (:func:`~sparkcdc.engine.apply_batch_set`, routed by
+        the qualified table name). The batch is persisted here unless the
+        caller already did, so the (possibly expensive) upstream is
+        computed once for every pass over it."""
         qualified = F.concat_ws(".", F.col("source.db"), F.col("source.table"))
         owned = not env.is_cached
         if owned:
             env = env.persist()
         try:
-            return {
-                name: eng._apply_batch(
-                    env.filter(qualified == name),
-                    batch_id=(batch_id if batch_id is not None
-                              else eng.committed_batch() + 1),
-                    kind=kind, offsets=offsets,
-                )
-                for name, eng in engines.items()
-            }
+            res = apply_batch_set(
+                [(name, eng, batch_id if batch_id is not None
+                  else eng.committed_batch() + 1)
+                 for name, eng in engines.items()],
+                env, route=qualified, kind=kind, offsets=offsets,
+            )
+            return dict(zip(engines, res))
         finally:
             if owned:
                 env.unpersist()

@@ -41,16 +41,21 @@ class SchemaHistory:
             self.store = FileHistoryStore(path_or_store)
 
     def record(
-        self, offset: int, changes: list[dict], base_epoch: int | None = None
+        self, offset: int, changes: list[dict], base_epoch: int | None = None,
+        ddl: str | None = None,
     ) -> None:
         """Journal a schema change effective for events at >= offset.
 
         ``base_epoch`` = the table epoch observed just before applying the
         change (write-ahead intent): recovery re-applies exactly the
-        entries whose target epoch (base+1) the table never reached."""
-        self.store.append({"offset": offset, "changes": changes,
-                           "base_epoch": base_epoch,
-                           "ts_ms": int(time.time() * 1000)})
+        entries whose target epoch (base+1) the table never reached.
+        ``ddl``: the statement text ``changes`` was parsed from, so a
+        restarted replay recognizes that statement as applied."""
+        entry = {"offset": offset, "changes": changes,
+                 "base_epoch": base_epoch, "ts_ms": int(time.time() * 1000)}
+        if ddl is not None:
+            entry["ddl"] = ddl
+        self.store.append(entry)
 
     def entries(self) -> list[dict]:
         out = self.store.load()

@@ -288,9 +288,10 @@ def pgoutput_to_envelopes(
     ``table`` filters to one captured relname (the include-list of a
     single-table engine). Truncates become op='t' envelopes (one per
     truncated relation). ``failure_handling``: ``skip`` drops malformed
-    messages (parse errors, tuple arity not matching any Relation epoch,
-    DMLs with no Relation at-or-before their LSN), ``fail`` aborts the
-    batch on the first one.
+    messages (parse errors, tuple arity not matching any Relation epoch),
+    ``fail`` aborts the batch on the first one. A DML with no Relation
+    at or before its LSN always raises: the slice is missing its Relation
+    rows, and skipping would silently lose committed rows.
 
     The input is scanned twice — once by the control-plane registry
     collect, once by the decode (cache the landing if it is expensive to
@@ -344,12 +345,16 @@ def pgoutput_to_envelopes(
                 for rid in d["rel_ids"]:
                     rel = relation_asof(rels, rid, row_lsn)
                     if rel is None:
-                        if fail:
-                            raise ValueError(
-                                f"no Relation message at or before "
-                                f"{lsn} for rel_id {rid}"
-                            )
-                        continue
+                        # not a malformed frame but a slicing error: the
+                        # frames hold a committed row without the
+                        # Relation that gives its columns. Skipping it
+                        # would lose the row while its offset commits, so
+                        # this raises under failure_handling="skip" too
+                        raise ValueError(
+                            f"no Relation message at or before "
+                            f"{lsn} for rel_id {rid}: slice the frames "
+                            f"with their Relation rows"
+                        )
                     ncols = len(rel["columns"])
                     bad = [t for t in (d["old"], d["new"])
                            if t is not None and len(t) != ncols]

@@ -168,6 +168,23 @@ def test_failure_handling_modes(spark):
         strict.collect()
 
 
+def test_dml_without_relation_raises_even_under_skip(spark):
+    """A slice that lost its Relation row is a slicing error, not a
+    malformed frame: its committed rows must not decode to nothing while
+    the slice's offsets commit."""
+    dmls = [(f"0/{0x10 * (i + 1):X}", i + 1,
+             encode_insert(7, [str(i), "signup", "1.0", None]))
+            for i in range(5)]
+    alone = pgoutput_to_envelopes(
+        _frames(spark, dmls), EVENT_ROW_FIELDS, ["user_id"], table="events")
+    with pytest.raises(Exception, match="no Relation message"):
+        alone.collect()
+    whole = pgoutput_to_envelopes(
+        _frames(spark, [("0/0", 0, REL)] + dmls), EVENT_ROW_FIELDS,
+        ["user_id"], table="events")
+    assert whole.count() == 5
+
+
 def test_generator_parser_roundtrip_matches_direct_adapter(spark, events_df):
     """events → pgoutput binary frames → envelopes must equal the direct
     events_to_envelopes adapter on op/offset/ts/before/after."""

@@ -155,3 +155,38 @@ def test_multitable_replay_skips_tables_ahead(spark, tmp_root):
     assert mte2.engines["code.a"].committed_offset() == off_a
     assert mte2.engines["code.b"].committed_offset() == 1000
     assert tables["code.b"].read().count() > 0
+
+
+@pytest.mark.parametrize("ddl", [False, True])
+def test_resume_applies_rest_of_an_offsets_schema_changes(
+        spark, tmp_root, ddl):
+    """Two schema changes at one offset, and a crash after the first was
+    journaled and evolved: the restarted replay applies the second, once
+    — and a further restart applies neither again."""
+    def engine():
+        return default_engine(spark, tmp_root, n_buckets=4,
+                              config=EngineConfig(batch_size=500, n_keys=20))
+
+    add_x = [{"action": "add", "name": "x", "type": "int"}]
+    add_y = [{"action": "add", "name": "y", "type": "int"}]
+    a, b = add_x, add_y
+    if ddl:
+        a = "ALTER TABLE source_code_repos ADD COLUMN x INT"
+        b = "ALTER TABLE source_code_repos ADD COLUMN y INT"
+    eng = engine()
+    eng.replay(1000)
+    # the crash point: the first change journaled and evolved, not the
+    # second
+    eng.schema_history.record(1000, add_x,
+                              base_epoch=eng.table.manifest().epoch,
+                              ddl=a if ddl else None)
+    eng.table.evolve(add_x)
+    changes = [(1000, a), (1000, b)]
+    eng2 = engine()
+    eng2.replay(1500, schema_changes=changes)
+    names = [f.name for f in eng2.table.manifest().fields]
+    assert names[-2:] == ["x", "y"] and names.count("x") == 1
+    assert len(eng2.schema_history.entries()) == 2
+    engine().replay(2000, schema_changes=changes)
+    assert [f.name for f in eng2.table.manifest().fields] == names
+    assert len(eng2.schema_history.entries()) == 2
